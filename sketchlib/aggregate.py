@@ -3,12 +3,18 @@
 This is the library's "physical plan" for mergeable sketches — the
 partial/final aggregate model the reference library implies with its
 elementwise merges (reference: include/ccm.h:401-407 sum for CM,
-include/hll.h:957-991 max for HLL, include/bf.h:515-539 OR for Bloom),
-expressed Spark-natively:
+include/hll.h:957-991 max for HLL, include/bf.h:515-539 OR for Bloom).
+Every build and merge path here is one core with four steps:
 
-    tokens DF ──mapInPandas──▶ one serialized partial per partition
-              ──repartition(w) + mapInPandas──▶ w tree-merged blobs
-              ──Arrow collect──▶ driver folds w blobs
+    pre-collapse   _collapse: select the key column(s); optionally a
+                   JVM groupBy(...).count() / SUM(weight) / distinct()
+    partial        mapInPandas (or applyInPandas per group): one
+                   serialized partial per partition and sketch name,
+                   updated by _update_panel
+    fold           round-robin repartition(tree_width) + mapInPandas
+                   (_fold_partials), or one applyInPandas per group
+                   (_fold_groups)
+    driver fold    Arrow collect + sketches.base.fold_blobs
 
 Design notes (these were measured, not guessed):
 - everything stays on the DataFrame/Arrow path; an earlier
@@ -16,8 +22,9 @@ Design notes (these were measured, not guessed):
   through the Py4J row path — the Arrow collect is ~10x faster;
 - partial blobs serialize counters at the narrowest lossless integer
   width (see cm._pack_u64), cutting merge traffic 2-8x;
-- the tree stage bounds driver fan-in for wide clusters: at 1000
-  executors the driver folds ``tree_width`` blobs, not 1000;
+- the fold stage bounds driver fan-in for wide clusters: at 1000
+  executors the driver folds ``tree_width`` blobs per name, not 1000;
+  it is skipped only when the partial count is known to be that small;
 - the per-partition kernel consumes Arrow batches and updates a numpy
   sketch — no per-row Python;
 - merges are associative & commutative, so partition order never
@@ -36,25 +43,130 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from sketchlib.sketches.base import deserialize
+# aliased: ``as_u64`` is also the builders' flag for it
+from sketchlib.hashing import as_u64 as _u64
+from sketchlib.sketches.base import deserialize, fold_blobs
+
+_PARTIALS = "name string, sketch binary"
 
 
-def _as_u64(series: pd.Series) -> np.ndarray:
-    """Reinterpret an int64 Arrow column as uint64 (bit pattern kept)."""
-    arr = series.to_numpy()
-    if arr.dtype == np.int64:
-        return arr.view(np.uint64)
-    return arr.astype(np.uint64, copy=False)
+def _collapse(df: DataFrame, keys: list[str], col: str,
+              pre_aggregate: bool = False, pre_distinct: bool = False,
+              weight_col: str | None = None) -> DataFrame:
+    """Pre-collapse ``(keys..., col)`` JVM-side before any Python runs:
+    ``pre_aggregate`` to ``(keys..., col, __cnt)`` rows by COUNT(*) or
+    ``SUM(weight_col)`` (Tungsten hash agg with map-side combine),
+    ``pre_distinct`` to distinct rows, else a plain projection."""
+    from pyspark.sql import functions as F
+
+    if pre_aggregate and pre_distinct:
+        raise ValueError("pre_aggregate and pre_distinct are exclusive")
+    if weight_col is not None and not pre_aggregate:
+        raise ValueError("weight_col requires pre_aggregate=True")
+    cols = [*keys, col]
+    if weight_col is not None:
+        # NULL-weight rows contribute nothing (and a key whose rows are
+        # all NULL-weight drops out) — without the filter, SUM over an
+        # all-NULL key yields a NULL __cnt that reaches the numpy kernel
+        # as NaN and corrupts it
+        return (df.select(*cols, weight_col)
+                .filter(F.col(weight_col).isNotNull()).groupBy(*cols)
+                .agg(F.sum(weight_col).cast("long").alias("__cnt")))
+    if pre_aggregate:
+        return df.select(*cols).groupBy(*cols).agg(
+            F.count("*").alias("__cnt"))
+    if pre_distinct:
+        return df.select(*cols).distinct()
+    return df.select(*cols)
 
 
-def _fold_blob_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    acc = None
+def _update_panel(panel: list, vals: np.ndarray, wts: np.ndarray | None):
+    """Feed one key batch to every sketch of a panel."""
+    for sk in panel:
+        if wts is None:
+            sk.update(vals)
+        else:
+            sk.update_weighted(vals, wts)
+
+
+def _fold_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas: fold ``(name, sketch)`` rows to one row per name."""
+    accs: dict[str, object] = {}
     for pdf in batches:
-        for b in pdf["sketch"]:
-            sk = deserialize(bytes(b))
-            acc = sk if acc is None else acc.merge(sk)
-    if acc is not None:
-        yield pd.DataFrame({"sketch": [acc.to_bytes()]})
+        for name, blobs in pdf.groupby("name", sort=False)["sketch"]:
+            accs[name] = fold_blobs(blobs, accs.get(name))
+    if accs:
+        yield pd.DataFrame({"name": list(accs),
+                            "sketch": [s.to_bytes() for s in accs.values()]})
+
+
+def _tree_fold(partials: DataFrame, width: int) -> DataFrame:
+    # round-robin, not hash-on-name: a one-name build must still spread
+    # its partials over ``width`` fold tasks
+    return partials.repartition(width).mapInPandas(_fold_partials,
+                                                   schema=_PARTIALS)
+
+
+def _fold_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """applyInPandas kernel: fold one group's blobs into one. A group
+    with a single blob round-trips it byte-identically (pinned for
+    every registered type by tests/test_registry.py)."""
+    head = pdf.iloc[:1].drop(columns=["sketch"]).copy()
+    head["sketch"] = [fold_blobs(pdf["sketch"]).to_bytes()]
+    return head
+
+
+def _fold_groups(frame: DataFrame, keys: list[str]) -> DataFrame:
+    """One blob per ``keys`` group of a ``(keys..., sketch)`` frame."""
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                       for f in frame.schema)
+    return frame.groupBy(*keys).applyInPandas(_fold_group, schema=schema)
+
+
+def _build(df: DataFrame, col: str,
+           factories: dict[str, Callable[[], object]], tree_width: int,
+           as_u64: bool, pre_aggregate: bool,
+           kernel_partitions: int | None = None,
+           weight_col: str | None = None) -> dict[str, object]:
+    """The ungrouped core: pre-collapse → one partial per partition and
+    name → round-robin fold → driver fold. Returns {name: sketch}."""
+    names = sorted(factories)
+    src = _collapse(df, [], col, pre_aggregate, weight_col=weight_col)
+    if kernel_partitions is not None:
+        # kernel parallelism follows the cluster, not the merge fan-in
+        src = src.repartition(kernel_partitions)
+
+    def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = ((_u64(pdf[col]) if as_u64 else pdf[col].to_numpy(),
+                 pdf["__cnt"].to_numpy() if pre_aggregate else None)
+                for pdf in batches if len(pdf))
+        if pre_aggregate:
+            # one kernel call per partition (not per Arrow batch) so
+            # order-sensitive kernels (conservative CM) are a pure
+            # function of the partition's multiset — reproducible
+            # regardless of Arrow batch sizing
+            rows = list(rows)
+            if not rows:
+                return
+            rows = [(np.concatenate([v for v, _ in rows]),
+                     np.concatenate([w for _, w in rows]))]
+        # unweighted: one update per Arrow batch keeps memory at a batch
+        panel = [factories[name]() for name in names]
+        for vals, wts in rows:
+            _update_panel(panel, vals, wts)
+        yield pd.DataFrame({"name": names,
+                            "sketch": [sk.to_bytes() for sk in panel]})
+
+    blobs = src.mapInPandas(partial_build, schema=_PARTIALS)
+    if kernel_partitions is None or \
+            kernel_partitions * len(names) > tree_width:
+        blobs = _tree_fold(blobs, tree_width)
+    folded = blobs.toPandas()
+    out = {}
+    for name in names:
+        acc = fold_blobs(folded["sketch"][folded["name"] == name])
+        out[name] = acc if acc is not None else factories[name]()
+    return out
 
 
 def build_sketch(df: DataFrame, col: str, factory: Callable[[], object],
@@ -84,85 +196,13 @@ def build_sketch(df: DataFrame, col: str, factory: Callable[[], object],
     the hook for time-decayed frequency (sketchlib/decay.py) and any
     other per-row-weighted statistic; weights must be integral (CM
     counters are int64).
+
+    The one-name case of :func:`build_sketches_multi`. With
+    ``kernel_partitions`` at most ``tree_width``, the partials go
+    straight to the driver fold (no fold stage).
     """
-    from pyspark.sql import functions as F
-
-    if weight_col is not None and not pre_aggregate:
-        raise ValueError("weight_col requires pre_aggregate=True")
-    if pre_aggregate:
-        # kernel parallelism follows the cluster, not the merge fan-in:
-        # at 10^9 distinct keys the weighted-update kernel is the
-        # heavy stage and must use every core; the blob fold below
-        # then reduces the partial count to ``tree_width`` before the
-        # driver sees anything (bounded driver fan-in at any scale)
-        if weight_col is None:
-            grouped = (df.select(col).groupBy(col)
-                       .agg(F.count("*").alias("__cnt")))
-        else:
-            # NULL-weight rows contribute nothing (and a key whose
-            # rows are all NULL-weight drops out) — without the
-            # filter, SUM over an all-NULL key yields a NULL __cnt
-            # that reaches the numpy kernel as NaN and corrupts it
-            grouped = (df.select(col, weight_col)
-                       .filter(F.col(weight_col).isNotNull())
-                       .groupBy(col)
-                       .agg(F.sum(weight_col).cast("long")
-                            .alias("__cnt")))
-        if kernel_partitions is not None:
-            grouped = grouped.repartition(kernel_partitions)
-
-        def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # one kernel call per partition (not per Arrow batch) so
-            # order-sensitive kernels (conservative CM) are a pure
-            # function of the partition's multiset — reproducible
-            # regardless of Arrow batch sizing
-            vs, ws = [], []
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                vs.append(_as_u64(pdf[col]) if as_u64
-                          else pdf[col].to_numpy())
-                ws.append(pdf["__cnt"].to_numpy())
-            if vs:
-                sk = factory()
-                sk.update_weighted(np.concatenate(vs), np.concatenate(ws))
-                yield pd.DataFrame({"sketch": [sk.to_bytes()]})
-
-        blobs = grouped.mapInPandas(partial_build, schema="sketch binary")
-        if kernel_partitions is None or kernel_partitions > tree_width:
-            blobs = (blobs.repartition(tree_width)
-                     .mapInPandas(_fold_blob_rows, schema="sketch binary"))
-        folded = blobs.toPandas()
-        acc = None
-        for b in folded["sketch"]:
-            sk = deserialize(bytes(b))
-            acc = sk if acc is None else acc.merge(sk)
-        return acc if acc is not None else factory()
-
-    def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        sk = factory()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = _as_u64(pdf[col]) if as_u64 else pdf[col].to_numpy()
-            sk.update(vals)
-        yield pd.DataFrame({"sketch": [sk.to_bytes()]})
-
-    src = df.select(col)
-    if kernel_partitions is not None:
-        src = src.repartition(kernel_partitions)
-    blobs = src.mapInPandas(partial_build, schema="sketch binary")
-    if kernel_partitions is None or kernel_partitions > tree_width:
-        blobs = (blobs.repartition(tree_width)
-                 .mapInPandas(_fold_blob_rows, schema="sketch binary"))
-    folded = blobs.toPandas()
-    acc = None
-    for b in folded["sketch"]:
-        sk = deserialize(bytes(b))
-        acc = sk if acc is None else acc.merge(sk)
-    if acc is None:
-        acc = factory()
-    return acc
+    return _build(df, col, {"sketch": factory}, tree_width, as_u64,
+                  pre_aggregate, kernel_partitions, weight_col)["sketch"]
 
 
 def build_grouped_sketches(df: DataFrame, key_cols: list[str], col: str,
@@ -413,65 +453,31 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
     time-decayed statistics; weights must be integral."""
     from pyspark.sql import functions as F
 
-    if pre_aggregate and pre_distinct:
-        raise ValueError("pre_aggregate and pre_distinct are exclusive")
-    if weight_col is not None and not pre_aggregate:
-        raise ValueError("weight_col requires pre_aggregate=True")
-
     names = sorted(factories)
     key_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in df.schema if f.name in key_cols)
-    out_schema = f"{key_schema}, name string, sketch binary"
-
-    if pre_aggregate:
-        if weight_col is None:
-            df = (df.select(*key_cols, col).groupBy(*key_cols, col)
-                  .agg(F.count("*").alias("__cnt")))
-        else:
-            # NULL-weight rows contribute nothing (see build_sketch:
-            # an all-NULL key would otherwise reach the kernel as NaN)
-            df = (df.select(*key_cols, col, weight_col)
-                  .filter(F.col(weight_col).isNotNull())
-                  .groupBy(*key_cols, col)
-                  .agg(F.sum(weight_col).cast("long").alias("__cnt")))
-    elif pre_distinct:
-        df = df.select(*key_cols, col).distinct()
-    else:
-        df = df.select(*key_cols, col)
+    df = _collapse(df, key_cols, col, pre_aggregate, pre_distinct,
+                   weight_col)
 
     def _per_group(group_cols: list[str]):
         def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            vals = _as_u64(pdf[col]) if as_u64 else pdf[col].to_numpy()
-            wts = pdf["__cnt"].to_numpy() if pre_aggregate else None
+            panel = [factories[name]() for name in names]
+            _update_panel(panel,
+                          _u64(pdf[col]) if as_u64 else pdf[col].to_numpy(),
+                          pdf["__cnt"].to_numpy() if pre_aggregate else None)
             head = pdf.iloc[:1][group_cols]
             out = (head.loc[head.index.repeat(len(names))]
                    .reset_index(drop=True))
-            blobs = []
-            for name in names:
-                sk = factories[name]()
-                if pre_aggregate:
-                    sk.update_weighted(vals, wts)
-                else:
-                    sk.update(vals)
-                blobs.append(sk.to_bytes())
             out["name"] = names
-            out["sketch"] = blobs
+            out["sketch"] = [sk.to_bytes() for sk in panel]
             return out
         return per_group
 
     if not salt_buckets:
-        return (df.groupBy(*key_cols)
-                  .applyInPandas(_per_group(key_cols), schema=out_schema))
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for b in pdf["sketch"]:
-            sk = deserialize(bytes(b))
-            acc = sk if acc is None else acc.merge(sk)
-        head = pdf.iloc[:1][key_cols + ["name"]].copy()
-        head["sketch"] = [acc.to_bytes()]
-        return head
+        return (df.groupBy(*key_cols).applyInPandas(
+            _per_group(key_cols),
+            schema=f"{key_schema}, name string, sketch binary"))
 
     salted = df.withColumn("__salt",
                            F.pmod(F.xxhash64(col), F.lit(salt_buckets)))
@@ -480,38 +486,22 @@ def build_grouped_sketches_multi(df: DataFrame, key_cols: list[str],
                                schema=f"{key_schema}, __salt bigint, "
                                       "name string, sketch binary")
                 .drop("__salt"))
-    return (partials.groupBy(*key_cols, "name")
-            .applyInPandas(merge_group, schema=out_schema))
-
-
-def _merge_blob_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """applyInPandas kernel: fold one group's blobs into one."""
-    acc = None
-    for b in pdf["sketch"]:
-        sk = deserialize(bytes(b))
-        acc = sk if acc is None else acc.merge(sk)
-    head = pdf.iloc[:1].drop(columns=["sketch"]).copy()
-    head["sketch"] = [acc.to_bytes()]
-    return head
+    return _fold_groups(partials, [*key_cols, "name"])
 
 
 def _merge_to_level(grouped: DataFrame, keys: list[str],
-                    key_fields: dict[str, str],
                     tree_width: int) -> DataFrame:
     """Merge a grouped sketch table down to granularity ``keys``
     (empty = grand total via a tree_width-way parallel fold; the
     repartition(1) barrier — NOT coalesce — keeps the fold stage its
     own parallel stage and ships only tree_width folded blobs to the
     final task)."""
+    from pyspark.sql import functions as F
+
     if keys:
-        schema = ", ".join(f"{k} {key_fields[k]}" for k in keys) \
-            + ", sketch binary"
-        return (grouped.select(*keys, "sketch").groupBy(*keys)
-                .applyInPandas(_merge_blob_group, schema=schema))
-    return (grouped.select("sketch").repartition(tree_width)
-            .mapInPandas(_fold_blob_rows, schema="sketch binary")
-            .repartition(1)
-            .mapInPandas(_fold_blob_rows, schema="sketch binary"))
+        return _fold_groups(grouped.select(*keys, "sketch"), keys)
+    total = grouped.select(F.lit("").alias("name"), "sketch")
+    return _tree_fold(_tree_fold(total, tree_width), 1).select("sketch")
 
 
 def rollup_grouped_sketches(grouped: DataFrame,
@@ -534,8 +524,6 @@ def rollup_grouped_sketches(grouped: DataFrame,
     oracle. The grand-total level folds through ``tree_width``
     partitions before the final single-task merge, so driver-free
     fan-in stays bounded at any group count."""
-    from pyspark.sql import functions as F
-
     key_fields = {f.name: f.dataType.simpleString()
                   for f in grouped.schema if f.name != "sketch"}
     assert list(key_fields) == key_cols, (list(key_fields), key_cols)
@@ -544,7 +532,7 @@ def rollup_grouped_sketches(grouped: DataFrame,
     cur = grouped
     for i in range(len(key_cols) - 1, -1, -1):
         keys = key_cols[:i]
-        cur = _merge_to_level(cur, keys, key_fields, tree_width)
+        cur = _merge_to_level(cur, keys, tree_width)
         levels.append(_pad_keys(cur, keys, key_cols, key_fields))
     out = levels[0]
     for lv in levels[1:]:
@@ -581,8 +569,7 @@ def cube_grouped_sketches(grouped: DataFrame,
     out = _pad_keys(grouped, key_cols, key_cols, key_fields)
     for r in range(len(key_cols) - 1, -1, -1):
         for keys in combinations(key_cols, r):
-            lvl = _merge_to_level(grouped, list(keys), key_fields,
-                                  tree_width)
+            lvl = _merge_to_level(grouped, list(keys), tree_width)
             out = out.unionByName(
                 _pad_keys(lvl, list(keys), key_cols, key_fields))
     return out
@@ -598,11 +585,10 @@ def build_sketches_multi(df: DataFrame, col: str,
     BASELINE.md measures ~88% of build wall in scan/agg), and a user
     who wants HLL + CM + Bloom + quantiles over the same key stream
     should pay it once, not once per sketch. Each partition updates
-    every factory's partial from the same Arrow batches; partials
-    shuffle keyed by sketch name, so the fold stage is one task per
-    sketch and the driver folds ``tree_width`` blobs per name — the
-    same bounded fan-in as build_sketch, multiplied only by the number
-    of sketches.
+    every factory's partial from the same Arrow batches; the
+    round-robin fold stage folds them per name, so the driver folds at
+    most ``tree_width`` blobs per name — the same bounded fan-in as
+    :func:`build_sketch`, which is this function's one-name case.
 
     ``pre_aggregate=True`` additionally collapses the stream to
     (key, count) JVM-side first and requires every factory's sketch to
@@ -616,59 +602,4 @@ def build_sketches_multi(df: DataFrame, col: str,
     paths) results are bit-identical to independent build_sketch calls
     per factory (tested).
     """
-    from pyspark.sql import functions as F
-
-    names = sorted(factories)
-    if pre_aggregate:
-        src = (df.select(col).groupBy(col)
-               .agg(F.count("*").alias("__cnt")))
-    else:
-        src = df.select(col)
-
-    def partial_build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vs, ws = [], []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vs.append(_as_u64(pdf[col]) if as_u64 else pdf[col].to_numpy())
-            if pre_aggregate:
-                ws.append(pdf["__cnt"].to_numpy())
-        if not vs:
-            return
-        vals = np.concatenate(vs)
-        wts = np.concatenate(ws) if pre_aggregate else None
-        out_names, out_blobs = [], []
-        for name in names:
-            sk = factories[name]()
-            if pre_aggregate:
-                sk.update_weighted(vals, wts)
-            else:
-                sk.update(vals)
-            out_names.append(name)
-            out_blobs.append(sk.to_bytes())
-        yield pd.DataFrame({"name": out_names, "sketch": out_blobs})
-
-    def fold_named(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accs: dict[str, object] = {}
-        for pdf in batches:
-            for name, b in zip(pdf["name"], pdf["sketch"]):
-                sk = deserialize(bytes(b))
-                accs[name] = sk if name not in accs \
-                    else accs[name].merge(sk)
-        if accs:
-            yield pd.DataFrame({
-                "name": list(accs),
-                "sketch": [s.to_bytes() for s in accs.values()]})
-
-    blobs = src.mapInPandas(partial_build, schema="name string, sketch binary")
-    folded = (blobs.repartition(tree_width * len(names), "name")
-              .mapInPandas(fold_named, schema="name string, sketch binary")
-              .toPandas())
-    out: dict[str, object] = {}
-    for name, b in zip(folded["name"], folded["sketch"]):
-        sk = deserialize(bytes(b))
-        out[name] = sk if name not in out else out[name].merge(sk)
-    missing = set(names) - set(out)
-    for name in missing:  # empty input
-        out[name] = factories[name]()
-    return out
+    return _build(df, col, factories, tree_width, as_u64, pre_aggregate)

@@ -51,11 +51,11 @@ from __future__ import annotations
 import uuid
 from functools import partial
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from sketchlib.dedup import shingles
+from sketchlib.hashing import as_u64
 
 
 def benchmark_shingle_set(bench: DataFrame, n: int = 3,
@@ -123,10 +123,7 @@ def contamination(train: DataFrame, bench: DataFrame, n: int = 3,
         @F.pandas_udf("boolean")
         def maybe(v: pd.Series) -> pd.Series:
             sk = _cached_sketch(cache_key, blob.value)
-            vals = v.to_numpy()
-            vals = (vals.view(np.uint64) if vals.dtype == np.int64
-                    else vals.astype(np.uint64))
-            return pd.Series(sk.contains(vals))
+            return pd.Series(sk.contains(as_u64(v)))
 
         # prefilter: candidate docs by MAYBE-hit count (superset of the
         # truth — no false negatives); clean docs exit before any join

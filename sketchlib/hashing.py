@@ -64,6 +64,14 @@ class MT19937_64:
         return x
 
 
+def as_u64(col) -> np.ndarray:
+    """Sketch keys from an int64 Arrow/pandas column (or array): the
+    signed xxhash64 bit pattern reinterpreted as uint64, no copy."""
+    arr = np.asarray(col)
+    return (arr.view(_U64) if arr.dtype == np.int64
+            else arr.astype(_U64, copy=False))
+
+
 def derive_seeds(seedseed: int, nh: int) -> np.ndarray:
     """Row seeds exactly as the reference sketch constructors derive them:
     ``mt19937_64(seedseed + 4)`` drawn ``nh`` times, after forcing ``nh``

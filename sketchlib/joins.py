@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sketchlib.aggregate import build_sketch
+from sketchlib.hashing import as_u64
 from sketchlib.queries import _cached_sketch
 
 __all__ = ["join_size_estimate", "bloom_semi_join", "bloom_anti_join",
@@ -199,10 +200,7 @@ def bloom_semi_join(spark: SparkSession, fact: DataFrame, fact_key: str,
     @F.pandas_udf("boolean")
     def maybe_member(v: pd.Series) -> pd.Series:
         sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 \
-            else vals.astype(np.uint64)
-        return pd.Series(sk.contains(vals))
+        return pd.Series(sk.contains(as_u64(v)))
 
     prefiltered = fact.filter(
         maybe_member(F.xxhash64(fact_key)))
@@ -364,10 +362,7 @@ def bloom_anti_join(spark: SparkSession, fact: DataFrame, fact_key: str,
     @F.pandas_udf("boolean")
     def maybe_member(v: pd.Series) -> pd.Series:
         sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 \
-            else vals.astype(np.uint64)
-        return pd.Series(sk.contains(vals))
+        return pd.Series(sk.contains(as_u64(v)))
 
     flagged = fact.withColumn("__maybe", maybe_member(F.xxhash64(fact_key)))
     definite = flagged.filter(~F.col("__maybe")).drop("__maybe")

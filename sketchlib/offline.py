@@ -39,31 +39,39 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from sketchlib.aggregate import _collapse
 from sketchlib.checkpoint_io import CheckpointStore, Snapshot, sketch_fill_metrics
+from sketchlib.hashing import as_u64
 from sketchlib.sketches.cm import CMConfig, OfflineCountMin
-
-_U64 = np.uint64
-
-
-def _vals_u64(pdf: pd.Series) -> np.ndarray:
-    arr = pdf.to_numpy()
-    return arr.view(_U64) if arr.dtype == np.int64 else arr.astype(_U64)
 
 
 def _config_key(cfg: CMConfig, rounds: int) -> str:
     return f"np{cfg.np_bits}_nh{cfg.nh}_s{cfg.seed}_{'occm' if cfg.conservative else 'ocm'}_n{rounds}"
 
 
-class _PassResult:
-    def __init__(self, state: OfflineCountMin, lineage: list[dict]):
-        self.state = state
-        self.lineage = lineage
+def _fold_payloads(frames, kind: str) -> tuple[list, object]:
+    """Fold ``(lineage, payload)`` rows: lineage lists concatenate,
+    collision-flag bitmaps OR, count partials merge. Returns
+    ``(lineage, acc)``; acc is a uint8 bitmap, an OfflineCountMin or
+    None. The executor fold stage and the driver both use this."""
+    lineage: list = []
+    acc = None
+    for pdf in frames:
+        for lg, pl in zip(pdf["lineage"], pdf["payload"]):
+            lineage.extend(json.loads(lg))
+            if kind == "collision":
+                arr = np.frombuffer(bytes(pl), dtype=np.uint8)
+                acc = arr.copy() if acc is None else acc | arr
+            else:
+                sk = OfflineCountMin.from_bytes(bytes(pl))
+                acc = sk if acc is None else acc.merge(sk)
+    return lineage, acc
 
 
 def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
               round_: int, total_round: int,
               state: OfflineCountMin, tree_width: int = 8,
-              weighted: bool = False) -> _PassResult:
+              weighted: bool = False) -> tuple[OfflineCountMin, list]:
     """One full-input Spark job; kind in {'count', 'collision', 'occm'}.
 
     ``weighted`` means ``df`` is pre-grouped (col, __cnt) pairs — the
@@ -91,7 +99,7 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
                     continue
                 rows += int(pdf["__cnt"].sum()) if weighted else len(pdf)
                 flags |= local.mark_collisions_batch(
-                    _vals_u64(pdf[col]), round_, b_core.value, coll)
+                    as_u64(pdf[col]), round_, b_core.value, coll)
             payload = np.packbits(flags.reshape(-1)).tobytes()
         elif kind == "count":
             for pdf in batches:
@@ -99,7 +107,7 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
                     continue
                 w = pdf["__cnt"].to_numpy() if weighted else None
                 rows += int(w.sum()) if weighted else len(pdf)
-                local.update_count_batch(_vals_u64(pdf[col]), weights=w)
+                local.update_count_batch(as_u64(pdf[col]), weights=w)
             payload = local.to_bytes()
         else:  # occm combined — conservative is batching-sensitive, so
             # process the partition as ONE batch: the result is then a
@@ -109,7 +117,7 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
             for pdf in batches:
                 if not len(pdf):
                     continue
-                vs.append(_vals_u64(pdf[col]))
+                vs.append(as_u64(pdf[col]))
                 if weighted:
                     ws.append(pdf["__cnt"].to_numpy())
             if vs:
@@ -132,18 +140,7 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
     # tree stage on the Arrow path (no RDD/pickle round trip); lineage
     # rides along as JSON so no second job is needed
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        lin: list = []
-        acc = None
-        for pdf in batches:
-            for lg, pl in zip(pdf["lineage"], pdf["payload"]):
-                lin.extend(json.loads(lg))
-                pl = bytes(pl)
-                if kind == "collision":
-                    arr = np.frombuffer(pl, dtype=np.uint8)
-                    acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
-                else:
-                    sk = OfflineCountMin.from_bytes(pl)
-                    acc = sk if acc is None else acc.merge(sk)
+        lin, acc = _fold_payloads(batches, kind)
         if acc is not None:
             out = acc.tobytes() if kind == "collision" else acc.to_bytes()
             yield pd.DataFrame({"lineage": [json.dumps(lin)],
@@ -152,44 +149,23 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
     # the fold stage exists to bound driver fan-in; when there are
     # already <= tree_width partials it would only add a stage that
     # shuffles every multi-MB blob once more — pull them directly
-    if df.rdd.getNumPartitions() <= tree_width:
-        folded = parts.toPandas()
-    else:
-        folded = (parts.repartition(tree_width)
-                       .mapInPandas(fold,
-                                    schema="lineage string, payload binary")
-                       .toPandas())
-    lineage: list = []
-    payload = None
-    for lg, pl in zip(folded["lineage"], folded["payload"]):
-        lineage.extend(json.loads(lg))
-        pl = bytes(pl)
-        if payload is None:
-            payload = pl
-        elif kind == "collision":
-            payload = bytes(np.bitwise_or(np.frombuffer(payload, np.uint8),
-                                          np.frombuffer(pl, np.uint8)))
-        else:
-            sk = OfflineCountMin.from_bytes(payload)
-            payload = sk.merge(OfflineCountMin.from_bytes(pl)).to_bytes()
+    if df.rdd.getNumPartitions() > tree_width:
+        parts = (parts.repartition(tree_width)
+                 .mapInPandas(fold, schema="lineage string, payload binary"))
+    lineage, acc = _fold_payloads([parts.toPandas()], kind)
 
     if kind == "collision":
-        nbits = state.collision.size
-        flags = np.unpackbits(
-            np.frombuffer(payload, dtype=np.uint8))[:nbits].astype(bool)
-        flags = flags.reshape(state.collision.shape)
+        flags = np.unpackbits(acc)[:state.collision.size].astype(bool)
         state.collision = np.maximum(
             state.collision,
-            np.where(flags, np.int32(round_ - 1), np.int32(0)))
-        new_state = state
-    else:
-        agg = OfflineCountMin.from_bytes(payload)
-        # partials each started from the broadcast collision table; the
-        # max-merge keeps it plus any new marks (occm); core summed.
-        new_state = agg
+            np.where(flags.reshape(state.collision.shape),
+                     np.int32(round_ - 1), np.int32(0)))
+        acc = state
+    # else: partials each started from the broadcast collision table;
+    # the max-merge keeps it plus any new marks (occm); core summed
     b_coll.destroy()
     b_core.destroy()
-    return _PassResult(new_state, lineage)
+    return acc, lineage
 
 
 def _build_local_weighted(pdf, col: str, cfg: CMConfig,
@@ -198,7 +174,7 @@ def _build_local_weighted(pdf, col: str, cfg: CMConfig,
     table — identical batch kernels (they are order-independent over a
     batch), so the result is bit-identical to a one-partition
     distributed run, without 2n-1 Spark jobs + broadcasts."""
-    vals = _vals_u64(pdf[col])
+    vals = as_u64(pdf[col])
     weights = pdf["__cnt"].to_numpy()
     state = OfflineCountMin(cfg)
     for r in range(rounds):
@@ -247,9 +223,7 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
     persisted = None
     n_distinct = None
     if pre_aggregate:
-        from pyspark.sql import functions as F
-        df = (df.select(col).groupBy(col)
-                .agg(F.count("*").alias("__cnt")))
+        df = _collapse(df, [], col, pre_aggregate=True)
         weighted = True
 
     def materialize(grouped):
@@ -314,16 +288,15 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
             if kind in ("count", "occm"):
                 state.clear_core()  # main.cpp:49/76: zero counters,
                 # keep marks
-            res = _run_pass(df, col, cfg, kind, r, rounds, state,
-                            tree_width, weighted=weighted)
-            state = res.state
+            state, lineage = _run_pass(df, col, cfg, kind, r, rounds,
+                                       state, tree_width, weighted=weighted)
             if store is not None:
                 store.commit(
                     Snapshot(snapshot_id=snap_id,
                              config={**json.loads(json.dumps(cfg.__dict__)),
                                      "input_snapshot": input_snapshot},
                              round_=r, pass_name=kind, blob_file="",
-                             lineage=res.lineage,
+                             lineage=lineage,
                              metrics=sketch_fill_metrics(state.core)),
                     state.to_bytes())
     finally:

@@ -18,7 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from sketchlib.aggregate import build_sketch
-from sketchlib.sketches.base import deserialize
+from sketchlib.hashing import as_u64
+from sketchlib.sketches.base import deserialize, fold_blobs
 from sketchlib.sketches.cm import CMConfig, CountMin
 from sketchlib.offline import build_offline
 
@@ -53,9 +54,7 @@ def _estimate_col(spark: SparkSession, sketch, keys: DataFrame,
     @F.pandas_udf("long")
     def est(v: pd.Series) -> pd.Series:
         sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 else vals.astype(np.uint64)
-        return pd.Series(sk.estimate(vals).astype(np.int64))
+        return pd.Series(sk.estimate(as_u64(v)).astype(np.int64))
 
     return keys.withColumn(out_col, est(F.col(key_hash_col)))
 
@@ -102,9 +101,7 @@ def cmm_point_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     @F.pandas_udf("double")
     def est(v: pd.Series) -> pd.Series:
         s = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 else vals.astype(np.uint64)
-        return pd.Series(s.estimate_mean_min(vals))
+        return pd.Series(s.estimate_mean_min(as_u64(v)))
 
     return (hashed.distinct()
             .withColumn("est_cmm", est(F.col("kh")))
@@ -265,9 +262,7 @@ def bloom_membership(spark: SparkSession, build_df: DataFrame,
     @F.pandas_udf("boolean")
     def member(v: pd.Series) -> pd.Series:
         sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 else vals.astype(np.uint64)
-        return pd.Series(sk.contains(vals))
+        return pd.Series(sk.contains(as_u64(v)))
 
     return probe_df.withColumn("maybe_member",
                                member(F.xxhash64(probe_col)))
@@ -339,10 +334,7 @@ def bloom_xor_membership(spark: SparkSession, df_a: DataFrame, col_a: str,
     @F.pandas_udf("boolean")
     def member(v: pd.Series) -> pd.Series:
         sk = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = vals.view(np.uint64) if vals.dtype == np.int64 \
-            else vals.astype(np.uint64)
-        return pd.Series(sk.contains(vals))
+        return pd.Series(sk.contains(as_u64(v)))
 
     return probe_df.withColumn("xor_member",
                                member(F.xxhash64(probe_col)))
@@ -417,10 +409,8 @@ def heavy_hitters_hk(df: DataFrame, key_col: str, k: int,
         allp = pd.concat(frames, ignore_index=True)
         counts = allp.groupby("kh", sort=False).agg(
             key=("key", "first"), cnt=("kh", "size")).reset_index()
-        kh = counts["kh"].to_numpy().view(np.uint64)
-        w = counts["cnt"].to_numpy()
         hk = HeavyKeeper(np_bits, nh, seed)
-        hk.update_weighted(kh, w)
+        hk.update_weighted(as_u64(counts["kh"]), counts["cnt"].to_numpy())
         top = counts.nlargest(m, "cnt")
         # nullable Int64 for kh: a plain int column with a None in it
         # would silently coerce to float64 and corrupt 64-bit hashes
@@ -436,10 +426,7 @@ def heavy_hitters_hk(df: DataFrame, key_col: str, k: int,
         partial_build, schema="sketch binary, key string, kh long")
     parts = parts.persist()
     blobs = parts.filter(F.col("sketch").isNotNull()).select("sketch")
-    merged = None
-    for b in blobs.toPandas()["sketch"]:
-        sk = deserialize(bytes(b))
-        merged = sk if merged is None else merged.merge(sk)
+    merged = fold_blobs(blobs.toPandas()["sketch"])
     if merged is None:
         merged = HeavyKeeper(np_bits, nh, seed)
     cands = (parts.filter(F.col("key").isNotNull())
@@ -543,10 +530,7 @@ def vac_spectrum_frequency(spark: SparkSession, df: DataFrame, key_col: str,
     @F.pandas_udf("array<long>")
     def spectrum(v: pd.Series) -> pd.Series:
         vac = _cached_sketch(cache_key, b.value)
-        vals = v.to_numpy()
-        vals = (vals.view(np.uint64) if vals.dtype == np.int64
-                else vals.astype(np.uint64))
-        spec = vac.spectrum(vals)  # (n_layers, n)
+        spec = vac.spectrum(as_u64(v))  # (n_layers, n)
         return pd.Series(list(spec.T))
 
     keys = hashed.distinct()
@@ -582,9 +566,7 @@ def swcm_trailing_frequency(spark: SparkSession, df: DataFrame,
         sk = SlidingWindowCM(window, np_bits, nh, seed)
         seen: set[int] = set()
         for b in batches:
-            vals = b["kh"].to_numpy()
-            vals = (vals.view(np.uint64) if vals.dtype == np.int64
-                    else vals.astype(np.uint64))
+            vals = as_u64(b["kh"])
             sk.update(vals)
             seen.update(np.unique(vals).tolist())
         arr = np.array(sorted(seen), dtype=np.uint64)

@@ -33,12 +33,27 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zpath)
 
 
+def _driver_mem() -> str:
+    """``SKETCHLIB_DRIVER_MEM``, else half of the host's MemAvailable
+    capped at 16g: the heap is pre-touched, so it must fit the host."""
+    if "SKETCHLIB_DRIVER_MEM" in os.environ:
+        return os.environ["SKETCHLIB_DRIVER_MEM"]
+    try:
+        with open("/proc/meminfo") as fh:
+            kib = next(int(line.split()[1]) for line in fh
+                       if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return "16g"
+    return f"{max(1024, min(16 << 10, kib // 2048))}m"
+
+
 def get_spark(app: str = "sketchlib", cpus: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
+    mem = _driver_mem()
     spark = (
         SparkSession.builder
         .master(f"local[{cpus}]")
@@ -52,11 +67,9 @@ def get_spark(app: str = "sketchlib", cpus: int | None = None,
         # mid-job (measured in this sandbox); pre-touching moves that
         # cost to startup and removes the dominant source of run-to-run
         # variance
-        .config("spark.driver.memory",
-                os.environ.get("SKETCHLIB_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", mem)
         .config("spark.driver.extraJavaOptions",
-                "-XX:+AlwaysPreTouch -Xms"
-                + os.environ.get("SKETCHLIB_DRIVER_MEM", "16g"))
+                "-XX:+AlwaysPreTouch -Xms" + mem)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

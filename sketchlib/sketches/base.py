@@ -33,7 +33,15 @@ def deserialize(blob: bytes):
     return cls.from_bytes(blob)
 
 
+def fold_blobs(blobs, acc=None):
+    """Merge serialized sketches left to right into ``acc`` (the first
+    blob's sketch when None). Returns None when there is nothing to
+    fold. Every distributed build and merge path folds with this."""
+    for b in blobs:
+        sk = deserialize(bytes(b))
+        acc = sk if acc is None else acc.merge(sk)
+    return acc
+
+
 def merge_blobs(a: bytes, b: bytes) -> bytes:
-    sa = deserialize(a)
-    sb = deserialize(b)
-    return sa.merge(sb).to_bytes()
+    return fold_blobs([a, b]).to_bytes()
