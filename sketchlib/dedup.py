@@ -327,14 +327,26 @@ def minhash_dedup_delta(new_docs: DataFrame, band_index: DataFrame,
     new doc (the old x old pairs were yesterday's output).
 
     Returns (id_a, id_b, jaccard >= threshold), id_a < id_b, same
-    contract as minhash_dedup_pairs."""
-    from pyspark import StorageLevel
+    contract as minhash_dedup_pairs. The delta's shingle and band
+    tables are persisted with ``cache.scoped_persist`` (the returned
+    plan reads them more than once), so repeated calls hold a bounded
+    number of them."""
+    from sketchlib.cache import scoped_persist
 
-    sh_new = (shingles(new_docs, shingle_n, id_col, text_col, hashed=True)
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    banded_new = (minhash_band_index(None, n_perm, bands, shingle_n,
-                                     id_col, text_col, shingle_df=sh_new)
-                  .persist(StorageLevel.MEMORY_AND_DISK))
+    sh_new = scoped_persist(shingles(new_docs, shingle_n, id_col, text_col,
+                                     hashed=True))
+    banded_new = scoped_persist(minhash_band_index(
+        None, n_perm, bands, shingle_n, id_col, text_col, shingle_df=sh_new))
+    return _delta_pairs(sh_new, banded_new, band_index, shingle_index,
+                        threshold, shingle_n, id_col, text_col)
+
+
+def _delta_pairs(sh_new: DataFrame, banded_new: DataFrame,
+                 band_index: DataFrame, shingle_index: DataFrame,
+                 threshold: float, shingle_n: int, id_col: str,
+                 text_col: str) -> DataFrame:
+    """minhash_dedup_delta's candidate + verify plan over the delta's
+    (persisted) shingle and band tables."""
     a = banded_new.alias("a")
     b = banded_new.alias("b")
     nn = (a.join(b, ["band", "key"])
@@ -351,11 +363,13 @@ def minhash_dedup_delta(new_docs: DataFrame, band_index: DataFrame,
                              F.col(f"o.{id_col}")).alias("id_b")))
     cands = nn.unionByName(no).distinct()
     # stored shingles of ONLY the candidate-matched old docs ride into
-    # the verify join (ids not in the index — the new docs — just don't
-    # match the semi-join; their shingles come from sh_new)
+    # the verify join; the new docs' shingles come from sh_new alone —
+    # the anti-join drops their index rows, which a replayed streaming
+    # batch (index appended, epoch marker not yet written) already has
     need = (cands.select(F.explode(F.array("id_a", "id_b"))
                          .alias(id_col)).distinct())
-    old_sh = shingle_index.join(need, id_col, "left_semi")
+    old_sh = (shingle_index.join(need, id_col, "left_semi")
+              .join(sh_new.select(id_col).distinct(), id_col, "left_anti"))
     union_sh = sh_new.unionByName(old_sh)
     return jaccard_pairs(None, threshold, shingle_n, id_col, text_col,
                          candidates=cands, shingle_df=union_sh)

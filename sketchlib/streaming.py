@@ -242,17 +242,21 @@ def minhash_delta_sink(index_dir: str, pairs_dir: str,
     Exactly-once: the pairs write is an epoch-keyed OVERWRITE
     (idempotent under replay), and an ``_epoch_<id>`` marker written
     AFTER the index append makes a replayed epoch skip entirely. A
-    crash between the append and the marker can leave duplicate index
-    rows for one epoch — harmless for candidates (distinct) and
-    neutralized for the Jaccard sizes by the ``distinct()`` applied to
-    the shingle index on read. (A production deployment replaces the
+    crash between the append and the marker leaves the batch's rows in
+    the index when the epoch replays; the delta verify drops the index
+    rows of the batch's own ids, and the ``distinct()`` applied to the
+    shingle index on read neutralizes duplicate rows, so the replay
+    writes the same pairs. (A production deployment replaces the
     marker file with a transactional table commit — the
     iceberg.catalog_ingest_sink epoch-property pattern; the dedup
-    semantics are identical.)"""
+    semantics are identical.) The batch's persisted shingle and band
+    tables are appended to the index as they are and released before
+    the batch returns."""
     import os
 
-    from sketchlib.dedup import (minhash_band_index, minhash_dedup_delta,
-                                 shingles)
+    from pyspark import StorageLevel
+
+    from sketchlib.dedup import _delta_pairs, minhash_band_index, shingles
 
     band_p = os.path.join(index_dir, "bands")
     sh_p = os.path.join(index_dir, "shingles")
@@ -271,16 +275,21 @@ def minhash_delta_sink(index_dir: str, pairs_dir: str,
             band_idx = spark.createDataFrame(
                 [], f"{id_col} long, band int, key long")
             sh_idx = spark.createDataFrame([], f"{id_col} long, sh64 long")
-        pairs = minhash_dedup_delta(batch, band_idx, sh_idx, threshold,
-                                    n_perm, bands, shingle_n,
-                                    id_col, text_col)
-        (pairs.write.mode("overwrite")
-         .parquet(os.path.join(pairs_dir, f"epoch={int(epoch_id)}")))
-        sh_new = shingles(batch, shingle_n, id_col, text_col, hashed=True)
-        sh_new.write.mode("append").parquet(sh_p)
-        (minhash_band_index(None, n_perm, bands, shingle_n, id_col,
-                            text_col, shingle_df=sh_new)
-         .write.mode("append").parquet(band_p))
+        sh_new = (shingles(batch, shingle_n, id_col, text_col, hashed=True)
+                  .persist(StorageLevel.MEMORY_AND_DISK))
+        banded_new = (minhash_band_index(None, n_perm, bands, shingle_n,
+                                         id_col, text_col, shingle_df=sh_new)
+                      .persist(StorageLevel.MEMORY_AND_DISK))
+        try:
+            pairs = _delta_pairs(sh_new, banded_new, band_idx, sh_idx,
+                                 threshold, shingle_n, id_col, text_col)
+            (pairs.write.mode("overwrite")
+             .parquet(os.path.join(pairs_dir, f"epoch={int(epoch_id)}")))
+            sh_new.write.mode("append").parquet(sh_p)
+            banded_new.write.mode("append").parquet(band_p)
+        finally:
+            banded_new.unpersist()
+            sh_new.unpersist()
         open(marker, "w").close()
 
     return per_batch

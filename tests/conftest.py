@@ -1,12 +1,18 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
 @pytest.fixture(scope="session")
 def spark():
     from sketchlib.session import get_spark
-    s = get_spark("sketchlib-tests", cpus=8, shuffle_partitions=8)
+    # local[SPARK_GRAFT_CPUS] (8 when unset); the shuffle width stays 8
+    # whatever the core count, so plans and partition counts do not
+    # depend on the host
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark("sketchlib-tests", cpus=cpus, shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
