@@ -453,6 +453,22 @@ def pq_encode(df: DataFrame, codebooks: np.ndarray,
             .withColumnsRenamed({"id": id_col}))
 
 
+def _local_cut(dist2: np.ndarray, ids: np.ndarray,
+               k: int) -> tuple[np.ndarray, np.ndarray]:
+    """One batch's top-k neighbors of one query as ``(ids, adc_sim)``.
+
+    The local cut must use the SAME total order as the global window
+    (adc_sim desc, neighbor_id asc): exact ADC ties are common
+    (identical codes => identical sums), and two distinct tiny dist2
+    values can round to one adc_sim near 1.0. A cut on raw dist2 or by
+    position could then drop the smaller-id tied neighbor, making top-k
+    depend on partition layout. So sort the adc_sim floats the window
+    ranks (lexsort: last key primary)."""
+    sim = 1.0 - dist2 / 2.0
+    keep = np.lexsort((ids, -sim))[:k]
+    return ids[keep], sim[keep]
+
+
 def ann_topk_pq(codes_df: DataFrame, queries: DataFrame,
                 codebooks: np.ndarray, k: int,
                 id_col: str = "vec_id",
@@ -501,17 +517,10 @@ def ann_topk_pq(codes_df: DataFrame, queries: DataFrame,
                 # when a query's whole neighborhood lives in one
                 # partition — e.g. cluster-aligned layouts)
                 mask = ids != qids[qi]
-                rm, im = row[mask], ids[mask]
-                # the local cut must use the SAME total order as the
-                # global window (adc_sim desc, neighbor_id asc): exact
-                # ADC ties are common (identical codes => identical
-                # sums) and a position-ordered argsort could drop the
-                # smaller-id tied neighbor, making top-k depend on
-                # partition layout. lexsort: last key primary.
-                keep = np.lexsort((im, rm))[:k]
+                nb, sim = _local_cut(row[mask], ids[mask], k)
                 out.append(pd.DataFrame({
-                    "query_id": qids[qi], "neighbor_id": im[keep],
-                    "adc_sim": 1.0 - rm[keep] / 2.0}))
+                    "query_id": qids[qi], "neighbor_id": nb,
+                    "adc_sim": sim}))
             yield pd.concat(out, ignore_index=True)
 
     local = codes_df.mapInPandas(
@@ -552,8 +561,9 @@ def ann_topk_ivfpq(codes_df: DataFrame, queries: DataFrame,
 
     Scale shape: the probed-cell union becomes a Catalyst ``isin``
     filter on the codes scan (partition-prunable when the index is
-    stored partitioned by cell); per-query LUTs and probe sets ride
-    the closure (nq * m * kcent doubles + nq * nprobe ints); each
+    stored partitioned by cell); per-query LUTs and a probed-cell
+    table ride the closure (nq * m * kcent doubles + nq * nlist
+    bools), so a batch's probe masks are one table lookup; each
     Arrow batch emits its LOCAL top-k per query (ties broken by
     neighbor id, the same total order as the global cut); the global
     cut is a window rank over nq * k * n_batches rows. Nothing about
@@ -570,8 +580,10 @@ def ann_topk_ivfpq(codes_df: DataFrame, queries: DataFrame,
     np_ = int(min(nprobe, len(C)))
     sims = Q @ C.T
     probes = np.argsort(-sims, axis=1, kind="stable")[:, :np_]
-    probe_sets = [set(map(int, r)) for r in probes]
-    cells_union = sorted({c for s in probe_sets for c in s})
+    # probed[q, c]: query q probes cell c
+    probed = np.zeros((len(qids), len(C)), dtype=bool)
+    probed[np.arange(len(qids))[:, None], probes] = True
+    cells_union = np.unique(probes).tolist()
 
     B = codebooks
     lut = np.empty((len(qids), m, kcent))
@@ -591,21 +603,19 @@ def ann_topk_ivfpq(codes_df: DataFrame, queries: DataFrame,
             d2 = np.zeros((len(qids), len(ids)))
             for j in range(m):
                 d2 += lut[:, j, codes[:, j]]
+            # probe restriction AND self-exclusion both before the
+            # local cut (see ann_topk_pq on why self-exclusion inside
+            # the kernel matters)
+            masks = probed[:, cells] & (ids[None, :] != qids[:, None])
             out = []
             for qi in range(len(qids)):
-                # probe restriction AND self-exclusion both before the
-                # local cut (see ann_topk_pq on why self-exclusion
-                # inside the kernel matters)
-                mask = np.fromiter((int(c) in probe_sets[qi]
-                                    for c in cells), bool, len(cells))
-                mask &= ids != qids[qi]
+                mask = masks[qi]
                 if not mask.any():
                     continue
-                rm, im = d2[qi][mask], ids[mask]
-                keep = np.lexsort((im, rm))[:k]
+                nb, sim = _local_cut(d2[qi][mask], ids[mask], k)
                 out.append(pd.DataFrame({
-                    "query_id": qids[qi], "neighbor_id": im[keep],
-                    "adc_sim": 1.0 - rm[keep] / 2.0}))
+                    "query_id": qids[qi], "neighbor_id": nb,
+                    "adc_sim": sim}))
             if out:
                 yield pd.concat(out, ignore_index=True)
 

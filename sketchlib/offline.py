@@ -1,9 +1,16 @@
 """Offline (multi-round) CM orchestrator — the reference's flagship.
 
 Re-expresses the reference driver loop (reference: main.cpp:35-90) for
-Spark: the driver holds the small round state, each pass is one Spark
-job over the token DataFrame, and per-round state moves via broadcast
-(driver -> executors) and treeReduce (executors -> driver):
+Spark. Where the round loop runs:
+
+  * on the driver, when a pre-aggregated (key, count) table has at most
+    ``local_threshold`` distinct keys (no checkpointing);
+  * in ONE task, when the pre-aggregated table is one partition after
+    its task cap — up to max(500k, nh*w/4) distinct keys (no
+    checkpointing): one job, one blob back, no broadcast or fold;
+  * otherwise in one Spark job per pass over the token DataFrame: the
+    driver holds the small round state, which moves via broadcast
+    (driver -> executors) and a blob fold (executors -> driver):
 
   OCM (plain offline, main.cpp:35-62):
     round r>0: collision pass — broadcast previous round's (core,
@@ -70,10 +77,12 @@ def _fold_payloads(frames, kind: str) -> tuple[list, object]:
 
 def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
               round_: int, total_round: int,
-              state: OfflineCountMin, tree_width: int = 8,
+              state: OfflineCountMin, n_parts: int, tree_width: int = 8,
               weighted: bool = False) -> tuple[OfflineCountMin, list]:
     """One full-input Spark job; kind in {'count', 'collision', 'occm'}.
 
+    ``n_parts`` is ``df``'s partition count, computed once per build:
+    asking a plan with an exchange for it runs the exchange's map stage.
     ``weighted`` means ``df`` is pre-grouped (col, __cnt) pairs — the
     scale path where the JVM hash aggregate did the counting."""
     sc = df.sparkSession.sparkContext
@@ -149,12 +158,14 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
     # the fold stage exists to bound driver fan-in; when there are
     # already <= tree_width partials it would only add a stage that
     # shuffles every multi-MB blob once more — pull them directly
-    if df.rdd.getNumPartitions() > tree_width:
+    if n_parts > tree_width:
         parts = (parts.repartition(tree_width)
                  .mapInPandas(fold, schema="lineage string, payload binary"))
     lineage, acc = _fold_payloads([parts.toPandas()], kind)
 
-    if kind == "collision":
+    if acc is None:  # an empty table has no partition: nothing to add
+        acc = state
+    elif kind == "collision":
         flags = np.unpackbits(acc)[:state.collision.size].astype(bool)
         state.collision = np.maximum(
             state.collision,
@@ -168,14 +179,13 @@ def _run_pass(df: DataFrame, col: str, cfg: CMConfig, kind: str,
     return acc, lineage
 
 
-def _build_local_weighted(pdf, col: str, cfg: CMConfig,
-                          rounds: int) -> OfflineCountMin:
-    """Driver-local round loop over a small pre-aggregated (key, count)
-    table — identical batch kernels (they are order-independent over a
-    batch), so the result is bit-identical to a one-partition
-    distributed run, without 2n-1 Spark jobs + broadcasts."""
-    vals = as_u64(pdf[col])
-    weights = pdf["__cnt"].to_numpy()
+def _build_local_weighted(vals: np.ndarray, weights: np.ndarray,
+                          cfg: CMConfig, rounds: int) -> OfflineCountMin:
+    """The whole round loop over one pre-aggregated (key, count) table,
+    on the driver or inside one task — identical batch kernels (they
+    are order-independent over a batch), so the result is bit-identical
+    to a one-partition per-pass run, without 2n-1 Spark jobs +
+    broadcasts."""
     state = OfflineCountMin(cfg)
     for r in range(rounds):
         if not cfg.conservative:
@@ -194,6 +204,29 @@ def _build_local_weighted(pdf, col: str, cfg: CMConfig,
     return state
 
 
+def _build_one_task(df: DataFrame, col: str, cfg: CMConfig,
+                    rounds: int) -> OfflineCountMin:
+    """Every round inside the task of a one-partition pre-aggregated
+    table. With one partition the merged state after a pass IS that
+    task's local state, so the next round's broadcast would only hand
+    the task back its own table: same computation, same row order, one
+    job and one blob instead of a job, broadcast and blob per pass."""
+    def loop(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        vs, ws = [np.zeros(0, np.uint64)], [np.zeros(0, np.int64)]
+        for pdf in batches:
+            vs.append(as_u64(pdf[col]))
+            ws.append(pdf["__cnt"].to_numpy())
+        sk = _build_local_weighted(np.concatenate(vs), np.concatenate(ws),
+                                   cfg, rounds)
+        yield pd.DataFrame({"payload": [sk.to_bytes()]})
+
+    out = (df.select(col, "__cnt")
+           .mapInPandas(loop, schema="payload binary").toPandas())
+    if not len(out):  # an empty table has no partition
+        return OfflineCountMin(cfg)
+    return OfflineCountMin.from_bytes(bytes(out["payload"].iloc[0]))
+
+
 def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
                   checkpoint_dir: str | None = None,
                   tree_width: int = 8,
@@ -210,11 +243,20 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
     is computed ONCE by a JVM hash aggregate and persisted, so each of
     the 2n-1 passes re-reads |distinct| weighted rows instead of
     re-scanning the raw stream — the offline algorithm's multi-pass
-    cost collapses to one scan plus n cheap sketch passes. When the
-    distinct-key table is tiny (≤ ``local_threshold`` rows, no
-    checkpointing), the round loop runs driver-local instead — the
-    broadcast-threshold analog: 2n-1 Spark jobs + state broadcasts
-    would cost more than the kernels themselves.
+    cost collapses to one scan plus n cheap sketch passes. Without
+    checkpointing, the pre-aggregated round loop runs
+
+      * on the driver when the table has ≤ ``local_threshold`` rows —
+        the broadcast-threshold analog: 2n-1 Spark jobs + state
+        broadcasts would cost more than the kernels themselves;
+      * in one task when the task-capped table is one partition, which
+        it is up to max(500k, nh*w/4) distinct keys: one job returns
+        one blob, with no state broadcast, per-pass blob or fold;
+      * in one job per pass otherwise (two or more partitions).
+
+    With ``checkpoint_dir`` or ``pre_aggregate=False`` every pass is
+    its own job. The driver and one-task loops give the sketch of a
+    one-partition per-pass run, bit for bit.
     """
     store = CheckpointStore(checkpoint_dir) if checkpoint_dir else None
     key = _config_key(cfg, rounds)
@@ -222,6 +264,7 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
     weighted = False
     persisted = None
     n_distinct = None
+    n_parts = None
     if pre_aggregate:
         df = _collapse(df, [], col, pre_aggregate=True)
         weighted = True
@@ -252,7 +295,14 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
         if local_threshold > 0 and n_distinct <= local_threshold:
             pdf = persisted.toPandas()
             persisted.unpersist()
-            return _build_local_weighted(pdf, col, cfg, rounds)
+            return _build_local_weighted(as_u64(pdf[col]),
+                                         pdf["__cnt"].to_numpy(), cfg, rounds)
+        n_parts = df.rdd.getNumPartitions()  # cached plan: runs no job
+        if n_parts <= 1:
+            try:
+                return _build_one_task(df, col, cfg, rounds)
+            finally:
+                persisted.unpersist()
 
     def passes():
         for r in range(rounds):
@@ -285,11 +335,14 @@ def build_offline(df: DataFrame, col: str, cfg: CMConfig, rounds: int,
                 # deferred until a pass actually has to run: a fully
                 # checkpointed resume must stay free of input scans
                 df = materialize(df)
+            if n_parts is None:
+                n_parts = df.rdd.getNumPartitions()
             if kind in ("count", "occm"):
                 state.clear_core()  # main.cpp:49/76: zero counters,
                 # keep marks
             state, lineage = _run_pass(df, col, cfg, kind, r, rounds,
-                                       state, tree_width, weighted=weighted)
+                                       state, n_parts, tree_width,
+                                       weighted=weighted)
             if store is not None:
                 store.commit(
                     Snapshot(snapshot_id=snap_id,
